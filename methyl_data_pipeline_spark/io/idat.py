@@ -24,13 +24,16 @@ Field codes used here (others are skipped):
     404  -> string      Position
 
 Spark integration: ``decode_idat`` maps the ``binaryFile`` rows
-produced by ``readers.read_idat_dir`` through an Arrow-batched
-``mapInPandas`` decoder into long (basename, channel, address_id,
-mean, sd, n_beads) rows — one task per file split, no driver-side
-loop, so a 10k-sample ingest parallelizes across executors exactly
-like the reference's 50-worker ``MulticoreParam`` fork
-(`Mouse_Microarray_General_Workflow.R:18-19`) but without process
-forks or temp files.
+produced by ``readers.read_idat_dir`` through a ``mapInArrow`` decoder
+into long (basename, channel, address_id, mean, sd, n_beads) rows. Each
+file becomes one Arrow record batch built straight from the NumPy arrays
+``parse_idat`` returns: one task per file split, no driver-side loop and
+no pandas, so a 10k-sample ingest parallelizes across executors like the
+reference's 50-worker ``MulticoreParam`` fork
+(`Mouse_Microarray_General_Workflow.R:18-19`) without process forks or
+temp files. ``betas_from_intensities`` then reads that decode once: one
+broadcast join against a manifest lookup that covers both probe designs,
+and one aggregate.
 """
 
 from __future__ import annotations
@@ -39,8 +42,9 @@ import struct
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -103,7 +107,7 @@ def parse_idat(buf: bytes) -> dict:
     if _ILLUMINA_ID not in fields:
         # DECODED_SCHEMA declares address_id non-nullable; failing here
         # gives a format diagnosis instead of an AttributeError on
-        # NoneType deep inside the mapInPandas worker
+        # NoneType deep inside the mapInArrow worker
         raise ValueError("IDAT missing IlluminaID field (102)")
     (n,) = struct.unpack_from("<i", buf, fields[_N_PROBES])
 
@@ -142,40 +146,52 @@ DECODED_SCHEMA = StructType(
 )
 
 
+_ARROW_SCHEMA = to_arrow_schema(DECODED_SCHEMA)
+
+
+def _record_batch(basename: str, channel: str, content: bytes) -> pa.RecordBatch:
+    """One IDAT file -> one Arrow record batch in ``DECODED_SCHEMA``:
+    numeric columns straight from ``parse_idat``'s arrays, the per-file
+    strings repeated, and an absent optional field as a null column."""
+    d = parse_idat(content)
+    n = d["n"]
+
+    def const(value: str | None) -> pa.Array:
+        return pa.repeat(pa.scalar(value, pa.string()), n)
+
+    def ints(values: np.ndarray | None, dtype: pa.DataType) -> pa.Array:
+        return pa.nulls(n, dtype) if values is None else pa.array(values, dtype)
+
+    return pa.RecordBatch.from_arrays(
+        [
+            const(basename),
+            const(channel),
+            ints(d["address_id"], pa.int64()),
+            ints(d["mean"], pa.int32()),
+            ints(d["sd"], pa.int32()),
+            ints(d["n_beads"], pa.int32()),
+            const(d.get("barcode")),
+            const(d.get("position")),
+        ],
+        schema=_ARROW_SCHEMA,
+    )
+
+
 def decode_idat(df: DataFrame) -> DataFrame:
     """binaryFile rows (basename, channel, content) -> long intensity
-    rows, one per bead address. Arrow-batched mapInPandas: each input
-    row (one IDAT file) explodes into n_probes output rows inside the
-    executor — the decode never touches the driver."""
+    rows, one per bead address. ``mapInArrow``: each input row (one IDAT
+    file) becomes one record batch of n_probes rows inside the executor;
+    the decode never touches the driver."""
     from methyl_data_pipeline_spark import deploy
 
     deploy.ensure_importable(df.sparkSession)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                d = parse_idat(bytes(row["content"]))
-                n = d["n"]
-                yield pd.DataFrame(
-                    {
-                        "basename": np.repeat(row["basename"], n),
-                        "channel": np.repeat(row["channel"], n),
-                        "address_id": d["address_id"].astype("int64"),
-                        "mean": d["mean"].astype("int32")
-                        if d["mean"] is not None
-                        else np.full(n, None),
-                        "sd": d["sd"].astype("int32")
-                        if d["sd"] is not None
-                        else np.full(n, None),
-                        "n_beads": d["n_beads"].astype("int32")
-                        if d["n_beads"] is not None
-                        else np.full(n, None),
-                        "barcode": np.repeat(d.get("barcode"), n),
-                        "position": np.repeat(d.get("position"), n),
-                    }
-                )
+    def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for row in batch.to_pylist():
+                yield _record_batch(row["basename"], row["channel"], row["content"])
 
-    return df.select("basename", "channel", "content").mapInPandas(
+    return df.select("basename", "channel", "content").mapInArrow(
         extract, DECODED_SCHEMA
     )
 
@@ -193,57 +209,55 @@ def betas_from_intensities(
       methylated = Grn channel, unmethylated = Red channel at the same
       address; Type I: both addresses read in the probe's color).
 
+    Both designs go through one lookup of (probe_id, addr, color, which)
+    rows: a Type II probe is one row with null color and null ``which``
+    (its channel decides: Grn -> M, Red -> U); a Type I probe is two
+    rows, M at address_m and U at address_u, both in its color. One
+    broadcast join and one aggregate then read the decoded rows once.
+
     Output: (basename, probe_id, beta DOUBLE) long rows — the engine's
     canonical ingest product, matching ``idat.r:76-77``'s beta matrix
     semantics without materializing a wide matrix.
     """
-    inten = decoded.select("basename", "channel", "address_id", "mean")
-    m = F.broadcast(manifest)
+    type_i = F.col("design_type") == "I"
 
-    # Type II: one address; Grn mean = methylated, Red = unmethylated.
-    t2 = (
-        inten.join(
-            m.filter(F.col("design_type") == "II").select(
-                "probe_id", F.col("address_m").alias("address_id")
-            ),
-            "address_id",
+    def entry(addr_col: str, which: str | None) -> Column:
+        return F.struct(
+            F.col(addr_col).alias("addr"), F.lit(which).cast("string").alias("which")
         )
-        .groupBy("basename", "probe_id")
-        .agg(
-            F.max(F.when(F.col("channel") == "Grn", F.col("mean"))).alias("m_int"),
-            F.max(F.when(F.col("channel") == "Red", F.col("mean"))).alias("u_int"),
-        )
-    )
 
-    # Type I: two addresses, both read in the probe's declared color.
-    t1m = m.filter(F.col("design_type") == "I").select(
-        "probe_id", F.col("color"), F.col("address_m").alias("addr"),
-        F.lit("M").alias("which"),
-    )
-    t1u = m.filter(F.col("design_type") == "I").select(
-        "probe_id", F.col("color"), F.col("address_u").alias("addr"),
-        F.lit("U").alias("which"),
-    )
-    t1 = (
-        inten.join(
-            F.broadcast(t1m.unionByName(t1u)),
-            (F.col("address_id") == F.col("addr"))
-            & (F.col("channel") == F.col("color")),
-            "inner",
-        )
-        .groupBy("basename", "probe_id")
-        .agg(
-            F.max(F.when(F.col("which") == "M", F.col("mean"))).alias("m_int"),
-            F.max(F.when(F.col("which") == "U", F.col("mean"))).alias("u_int"),
-        )
-    )
-
-    both = t2.unionByName(t1)
-    return both.select(
-        "basename",
+    lookup = manifest.filter(
+        (F.col("design_type") == "II") | (type_i & F.col("color").isNotNull())
+    ).select(
         "probe_id",
-        (
-            F.col("m_int")
-            / (F.col("m_int") + F.col("u_int") + F.lit(float(offset)))
-        ).alias("beta"),
+        F.when(type_i, F.col("color")).alias("color"),
+        F.inline(
+            F.when(type_i, F.array(entry("address_m", "M"), entry("address_u", "U")))
+            .otherwise(F.array(entry("address_m", None)))
+        ),
+    )
+
+    hits = decoded.select("basename", "channel", "address_id", "mean").join(
+        F.broadcast(lookup),
+        (F.col("address_id") == F.col("addr"))
+        & (F.col("color").isNull() | (F.col("channel") == F.col("color"))),
+    )
+    which = F.coalesce(
+        F.col("which"),
+        F.when(F.col("channel") == "Grn", "M").when(F.col("channel") == "Red", "U"),
+    )
+    return (
+        hits.groupBy("basename", "probe_id")
+        .agg(
+            F.max(F.when(which == "M", F.col("mean"))).alias("m_int"),
+            F.max(F.when(which == "U", F.col("mean"))).alias("u_int"),
+        )
+        .select(
+            "basename",
+            "probe_id",
+            (
+                F.col("m_int")
+                / (F.col("m_int") + F.col("u_int") + F.lit(float(offset)))
+            ).alias("beta"),
+        )
     )

@@ -146,7 +146,7 @@ def read_idat_dir(spark: SparkSession, path: str) -> DataFrame:
     ``*_Grn.idat`` pairs as binary rows with basename + channel.
 
     Decoding is the real pure-Python parser in ``io.idat`` (published
-    illuminaio layout) applied via ``mapInPandas`` — see
+    illuminaio layout) applied via ``mapInArrow`` — see
     ``io.idat.decode_idat``.
     """
     files = (

@@ -13,6 +13,8 @@ them — the algorithm decomposes into:
   pass 1  per-(probe, batch) moments  n, mean            (shuffle on probe)
   pass 2  per-probe grand mean + pooled variance         (reuse pass-1 agg)
   pass 3  standardize  Z = (x - grand_mean)/sqrt(var_pooled)
+          (a constant probe has zero var_pooled: its Z is null, so it
+           stays out of passes 4-5 and pass 7 returns it unadjusted)
   pass 4  per-(probe, batch) gamma_hat, delta_hat²  of Z
   pass 5  per-batch hyperpriors over probes:
             gamma_bar, t2  (normal prior on gamma)
@@ -66,14 +68,16 @@ def _standardize_and_priors(
     # pooled variance: (1/N) Σ_s (x - grand_mean)²  — one scan of facts.
     with_grand = df.join(grand, key_col)
     pooled = with_grand.groupBy(key_col).agg(
-        (F.sum(F.pow(x - F.col("grand_mean"), 2)) / F.first("n_total")).alias("var_pooled")
+        (F.sum(F.pow(x - F.col("grand_mean"), 2)) / F.first("n_total")).alias("var_pooled"),
+        (F.min(x) == F.max(x)).alias("constant"),
     )
 
     # pass 3: standardize. Persisted: z feeds both the per-(probe,batch)
     # moment pass and the final adjustment join — without the cache the
     # full fact-table lineage (2 scans + 2 shuffles) runs twice.
     z = with_grand.join(pooled, key_col).withColumn(
-        "z", (x - F.col("grand_mean")) / F.sqrt("var_pooled")
+        "z",
+        F.when(~F.col("constant"), (x - F.col("grand_mean")) / F.sqrt("var_pooled")),
     )
     if persist_z:
         z = cache.track(z)
@@ -340,21 +344,24 @@ def combat(
     df = long_df.select(key_col, sample_col, batch_col, value_col)
     z, zb, hyper = _standardize_and_priors(df, value_col, batch_col, key_col)
 
-    stars = _eb_stars(zb, hyper, batch_col, key_col, conv, max_iter).select(
-        key_col, batch_col, "gamma_star", "delta_star_sq"
-    )
+    stars = _eb_stars(
+        zb.where(F.col("n_b") > 0), hyper, batch_col, key_col, conv, max_iter
+    ).select(key_col, batch_col, "gamma_star", "delta_star_sq")
 
     # pass 7: adjust. stars is (probes × batches) — same partitioning key
-    # as the fact table, so AQE plans a co-partitioned join.
+    # as the fact table, so AQE plans a co-partitioned join. Rows without
+    # a non-null z have no stars; constant probes pass through as x.
     out_col = f"{value_col}_combat"
     return (
-        z.join(stars, [key_col, batch_col])
+        z.join(stars, [key_col, batch_col], "left")
         .withColumn(
             out_col,
-            F.sqrt("var_pooled")
-            * (F.col("z") - F.col("gamma_star"))
-            / F.sqrt("delta_star_sq")
-            + F.col("grand_mean"),
+            F.when(F.col("constant"), F.col(value_col)).otherwise(
+                F.sqrt("var_pooled")
+                * (F.col("z") - F.col("gamma_star"))
+                / F.sqrt("delta_star_sq")
+                + F.col("grand_mean")
+            ),
         )
         .select(key_col, sample_col, batch_col, value_col, out_col)
     )

@@ -331,3 +331,35 @@ def test_beta_mle_weighted_recovers_parameters():
     w2 = (x < np.median(x)).astype(float)
     a2, b2 = beta_mle_weighted(x, w2, a0, b0)
     assert (a2, b2) != (a, b)
+
+
+def test_combat_passes_constant_probe_through(spark):
+    """A probe whose M-values are all equal (beta 0.0005 sits below
+    ``model.mvalue``'s 0.001 clamp in every sample) has zero pooled
+    variance: ComBat returns it unadjusted and leaves it out of the
+    hyperprior pooling, so every other probe is adjusted exactly as in
+    a run without it."""
+    from methyl_data_pipeline_spark.model import mvalue
+
+    rng = np.random.RandomState(5)
+    samples = [(f"s{i}", "1" if i < 3 else "2") for i in range(6)]
+    rows = [
+        (f"cg{p:03d}", s, run, float(rng.beta(2, 2)) + (0.1 if run == "2" else 0.0))
+        for p in range(20)
+        for s, run in samples
+    ]
+    flat = [("cg999", s, run, 0.0005) for s, run in samples]
+
+    def adjusted(data):
+        df = spark.createDataFrame(data, ["probe_id", "sample_id", "run", "beta"])
+        out = combat(df.withColumn("mval", mvalue("beta")), value_col="mval")
+        return {(r.probe_id, r.sample_id): (r.mval, r.mval_combat) for r in out.collect()}
+
+    got = adjusted(rows + flat)
+    want = adjusted(rows)
+    assert len(got) == len(want) + 6
+    for s, _ in samples:
+        mval, mval_combat = got[("cg999", s)]
+        assert mval_combat == mval
+    for key, (_, mval_combat) in want.items():
+        assert got[key][1] == pytest.approx(mval_combat, rel=1e-12, abs=1e-12)

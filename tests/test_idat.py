@@ -44,8 +44,10 @@ def make_idat(
     n_beads: np.ndarray | None = None,
     barcode: str = "204375590015",
     position: str = "R01C01",
+    omit: tuple[int, ...] = (),
 ) -> bytes:
-    """Encode an IDAT v3 blob: header, field directory, payloads."""
+    """Encode an IDAT v3 blob: header, field directory, payloads.
+    ``omit`` drops field codes (e.g. the optional SD 103 / NBeads 107)."""
     n = len(addresses)
     if sds is None:
         sds = np.full(n, 7, dtype="<u2")
@@ -62,6 +64,7 @@ def make_idat(
         (403, _string("BeadChip 8x5")),
         (404, _string(position)),
     ]
+    payloads = [(code, blob) for code, blob in payloads if code not in omit]
     header_size = 4 + 8 + 4 + 10 * len(payloads)
     body = bytearray()
     directory = bytearray()
@@ -179,6 +182,91 @@ def test_betas_from_intensities(spark, idat_dir):
             )
     vals = [r.beta for r in out]
     assert all(0.0 <= v <= 1.0 for v in vals)
+
+
+def test_decode_idat_absent_optional_fields(spark, tmp_path):
+    """SD (103) and NBeads (107) are optional: a file without them
+    decodes to null ``sd`` / ``n_beads`` with exact addresses and means."""
+    addresses = np.array([7, 3, 11, 5], dtype="<i4")
+    means = np.array([0, 65535, 1234, 42], dtype="<u2")
+    (tmp_path / "S9_Grn.idat").write_bytes(
+        make_idat(addresses, means, omit=(103, 107))
+    )
+    rows = decode_idat(read_idat_dir(spark, str(tmp_path))).collect()
+    assert [r.address_id for r in rows] == addresses.astype("int64").tolist()
+    assert [r.mean for r in rows] == means.astype("int32").tolist()
+    assert all(r.sd is None and r.n_beads is None for r in rows)
+    assert {(r.basename, r.channel, r.barcode, r.position) for r in rows} == {
+        ("S9", "Grn", "204375590015", "R01C01")
+    }
+
+
+@pytest.fixture(scope="module")
+def edge_case(spark, tmp_path_factory):
+    """Sample A has both channels, sample G only its _Grn file, and S.idat
+    carries no channel suffix. The manifest holds 5 Type II probes,
+    3 Type I Grn and 3 Type I Red probes."""
+    rng = np.random.default_rng(23)
+    root = tmp_path_factory.mktemp("idat_edge")
+    addresses = np.arange(100, 117, dtype="<i4")
+    means = {}
+    for name in ["A_Grn", "A_Red", "G_Grn", "S"]:
+        means[name] = rng.integers(50, 5000, size=len(addresses)).astype("<u2")
+        (root / f"{name}.idat").write_bytes(make_idat(addresses, means[name]))
+    t2 = [("t2_%d" % i, "II", None, 100 + i, 100 + i) for i in range(5)]
+    t1 = [
+        ("t1%s_%d" % (color, i), "I", color, base + 2 * i, base + 2 * i + 1)
+        for color, base in (("Grn", 105), ("Red", 111))
+        for i in range(3)
+    ]
+    manifest = spark.createDataFrame(
+        t2 + t1, "probe_id string, design_type string, color string, "
+        "address_m long, address_u long",
+    )
+    decoded = decode_idat(read_idat_dir(spark, str(root)))
+    out = betas_from_intensities(decoded, manifest).collect()
+    return {(r.basename, r.probe_id): r.beta for r in out}, means
+
+
+def _beta(m, u) -> float:
+    return float(m) / (float(m) + float(u) + 100.0)
+
+
+def test_betas_type_i_red_probes(edge_case):
+    """A Type I Red probe reads both its addresses in the Red channel."""
+    got, means = edge_case
+    red = means["A_Red"]
+    for i in range(3):
+        m_idx, u_idx = 11 + 2 * i, 12 + 2 * i
+        assert got[("A", "t1Red_%d" % i)] == _beta(red[m_idx], red[u_idx])
+    grn = means["A_Grn"]
+    for i in range(3):
+        assert got[("A", "t1Grn_%d" % i)] == _beta(grn[5 + 2 * i], grn[6 + 2 * i])
+    for i in range(5):
+        assert got[("A", "t2_%d" % i)] == _beta(grn[i], red[i])
+
+
+def test_betas_sample_with_only_grn_file(edge_case):
+    """Without a _Red file, Type II probes come out with a null beta (no
+    unmethylated intensity), Grn Type I probes keep their beta and Red
+    Type I probes are absent."""
+    got, means = edge_case
+    keys = {p for b, p in got if b == "G"}
+    assert keys == {"t2_%d" % i for i in range(5)} | {"t1Grn_%d" % i for i in range(3)}
+    for i in range(5):
+        assert got[("G", "t2_%d" % i)] is None
+    grn = means["G_Grn"]
+    for i in range(3):
+        assert got[("G", "t1Grn_%d" % i)] == _beta(grn[5 + 2 * i], grn[6 + 2 * i])
+
+
+def test_betas_channel_less_file(edge_case):
+    """S.idat parses with an empty channel: it matches no Type I color,
+    and its Type II rows carry neither intensity, so their beta is null."""
+    got, _ = edge_case
+    assert {p for b, p in got if b == "S"} == {"t2_%d" % i for i in range(5)}
+    assert all(got[("S", "t2_%d" % i)] is None for i in range(5))
+    assert len(got) == 11 + 8 + 5
 
 
 def test_idat_to_qc_pipeline(spark, idat_dir):

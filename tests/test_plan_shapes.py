@@ -8,6 +8,10 @@ pathological plan shape, these fail before the bench does.
 
 from __future__ import annotations
 
+import contextlib
+import io
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,9 +19,16 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        df.explain(mode="formatted")
+    return out.getvalue()
+
+
+def _node_blocks(plan: str) -> list[str]:
+    """The formatted plan's per-node detail blocks, each starting with
+    its ``(id) NodeName`` header line."""
+    return [b for b in plan.split("\n(") if b.startswith(tuple("0123456789"))]
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +47,7 @@ def test_curate_batch_twin_gate_stays_above_the_exchange(docs):
     from methyl_data_pipeline_spark.streaming.events import curate_batch_twin
 
     plan = _formatted(curate_batch_twin(docs))
-    blocks = [b for b in plan.split("\n(") if b.startswith(tuple("0123456789"))]
+    blocks = _node_blocks(plan)
     gate_blocks = [b for b in blocks if "too_short" in b and ") Filter" in b.splitlines()[0]]
     assert gate_blocks, "quality gate filter not found in the plan"
     for b in gate_blocks:
@@ -92,3 +103,36 @@ def test_bpe_encode_word_stream_is_spread(docs):
         "bpe_encode lost the word-stream spread — the tokenize explode "
         "will serialize on a 1-partition scan"
     )
+
+
+def test_idat_ingest_decodes_each_file_once(spark, tmp_path):
+    """Both probe designs come from ONE decode of the IDAT files: the
+    beta plan holds one binaryFile scan, one Python map node and one
+    hash-partitioning exchange (the aggregate's). A per-design join
+    would repeat the scan and the decoder."""
+    from methyl_data_pipeline_spark.io.idat import betas_from_intensities, decode_idat
+    from methyl_data_pipeline_spark.io.readers import read_idat_dir
+    from test_idat import make_idat
+
+    addresses = np.arange(10, dtype="<i4")
+    for name in ["S1_Grn", "S1_Red"]:
+        (tmp_path / f"{name}.idat").write_bytes(
+            make_idat(addresses, addresses.astype("<u2"))
+        )
+    manifest = spark.createDataFrame(
+        [("cg1", "II", None, 1, 1), ("cg2", "I", "Red", 2, 3)],
+        "probe_id string, design_type string, color string, "
+        "address_m long, address_u long",
+    )
+    betas = betas_from_intensities(
+        decode_idat(read_idat_dir(spark, str(tmp_path))), manifest
+    )
+    blocks = _node_blocks(_formatted(betas))
+    headers = [b.splitlines()[0] for b in blocks]
+    hash_exchanges = [
+        b for b, h in zip(blocks, headers)
+        if h.endswith(") Exchange") and "hashpartitioning(" in b
+    ]
+    assert sum("Scan binaryFile" in h for h in headers) == 1, headers
+    assert sum("MapIn" in h for h in headers) == 1, headers
+    assert len(hash_exchanges) == 1, headers
