@@ -1836,7 +1836,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (train/eval overlap): docs with
     doc_id < 10 stand in for the eval set; every other doc is flagged
     if it shares any word-5-gram with it (ext.text.decontaminate —
-    broadcast semi-join on shingle hashes, no doc×doc compare)."""
+    broadcast semi-join on shingle strings, no doc×doc compare)."""
     from methyl_data_pipeline_spark.ext.text import decontaminate
 
     docs = _t(spark, sf_dir, "documents")
@@ -2057,9 +2057,10 @@ FROM scan LEFT JOIN s USING (doc_id) ORDER BY doc_id
 
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus curation (plans.curation.curate): quality gate
-    -> PII redaction -> decontamination vs the doc_id<10 eval set ->
-    exact dedup -> 512-token packing. Every stage is deterministic, so
-    the DuckDB oracle replays the FULL five-stage chain."""
+    -> PII redaction -> decontamination vs the doc_id<10 eval set (a
+    semi-join on 5-gram strings) -> exact dedup -> 512-token packing.
+    Every stage is deterministic, so the DuckDB oracle replays the FULL
+    five-stage chain."""
     from methyl_data_pipeline_spark.plans.curation import curate
 
     docs = _t(spark, sf_dir, "documents")

@@ -66,39 +66,34 @@ def dedup_exact(
     )
 
 
-def shingles_from_words(ws: Column, n: int = 3) -> Column:
-    """Word n-gram shingles from an already-split word array — lets a
-    pipeline that materialized the split once (e.g. plans.curation)
-    reuse it instead of re-running the normalize+split regex chain."""
-    ngrams = F.transform(
-        F.sequence(F.lit(0), F.size(ws) - n),
-        lambda i: F.concat_ws(" ", F.slice(ws, i + 1, n)),
-    )
-    # NULL word array (NULL text) -> NULL shingles, NOT [""]: without
-    # the isNotNull guard, F.size(NULL) = -1 falls to the otherwise
-    # branch where concat_ws SKIPS its NULL argument and fabricates a
-    # single empty-string shingle — a NULL doc would then minhash,
-    # band, and pair like a real (empty) document while SQL engines
-    # drop it from every unnest.
-    return F.when(F.size(ws) >= n, ngrams).otherwise(
-        F.when(ws.isNotNull(), F.array(F.concat_ws(" ", ws)))
+def shingles_from_norm(norm: Column, n: int = 3) -> Column:
+    """Word n-gram shingles of an already-normalized string (tokens are
+    the pieces of ``split(norm, ' ')``, empty ones included) — lets a
+    pipeline that holds the normalized body (e.g. plans.curation) shingle
+    it without re-running the normalize regex chain.
+
+    One ``regexp_extract_all``, which has generated code (the
+    ``transform``/``slice`` builder it replaces is interpreted per row):
+    every token start — the string start or a position after a space —
+    captures the next n tokens through a lookahead. A string of fewer
+    than n tokens has no such capture, and the second alternative
+    (anchored at the string start) captures the whole string instead,
+    so it yields ``[norm]``. NULL in, NULL out: a NULL doc drops from
+    every explode, as it does from SQL engines' unnest."""
+    # (?s): '.' must cross the line terminators (U+2028) that \s leaves;
+    # a positive (?<= ) so the middle of a surrogate pair (after an
+    # emoji's high half) never counts as a token start
+    short = "|^.*" if n > 1 else ""
+    return F.regexp_extract_all(
+        norm, F.lit(f"(?s)(?:^|(?<= ))(?=([^ ]*(?: [^ ]*){{{n - 1}}}{short}))"), F.lit(1)
     )
 
 
 def shingles(text_col: str, n: int = 3) -> Column:
     """Word n-gram shingles of lowercased, whitespace-normalized text.
     Documents shorter than n words yield the whole text as one shingle
-    (so they still participate in dedup).
-
-    The split is BOUND ONCE as a lambda variable (single-element
-    ``transform`` wrapper): Catalyst does not common-subexpression-
-    eliminate inside higher-order functions, so inlining the
-    regex+split into the per-gram ``slice`` re-evaluates it O(words)
-    times per document — measured 5x slower on the trigram bench."""
-    split_expr = F.split(normalize_label(F.col(text_col)), " ")
-    return F.transform(
-        F.array(split_expr), lambda ws: shingles_from_words(ws, n)
-    )[0]
+    (so they still participate in dedup). See :func:`shingles_from_norm`."""
+    return shingles_from_norm(normalize_label(F.col(text_col)), n)
 
 
 # universal-hash mixing constants: one md5 per shingle, then

@@ -709,21 +709,23 @@ def quality_reject_reasons(
     (empty string = keep). Lets pipelines FILTER on quality inline —
     ``df.filter(quality_reject_reasons() == "")`` — with no self-join
     against a verdict projection; :func:`quality_filter_scan` wraps it
-    into the tabular verdict output."""
-    ws = words(text_col)
+    into the tabular verdict output.
+
+    The word split is bound ONCE as a lambda variable (the
+    single-element ``transform`` idiom of ``ext.dedup``): the signals
+    below read it six times, and Catalyst does not eliminate common
+    subexpressions under the interpreted higher-order functions, so an
+    inlined ``words(text)`` would split each document once per read."""
     en = F.array([F.lit(w) for w in STOPWORDS["en"]])
-    top_cnt = _max_run_sorted(F.array_sort(ws))
-    nw = F.size(ws)
-    mwl = F.length(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", "")) / nw
-    twf = top_cnt / nw
-    ttr = F.size(F.array_distinct(ws)) / nw
-    stop = F.size(F.filter(ws, lambda w: F.array_contains(en, w)))
-    # NULL text gets its own explicit verdict: without this branch,
-    # Spark's legacy F.size(NULL)=-1 would synthesize
-    # "too_short,no_stopwords" while a NULL-propagating SQL engine
-    # omits every CASE — a cross-engine divergence on NULL corpora.
-    return F.when(F.col(text_col).isNull(), F.lit("null_text")).otherwise(
-        F.concat_ws(
+    non_ws = F.length(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", ""))
+
+    def verdict(ws: Column) -> Column:
+        nw = F.size(ws)
+        mwl = non_ws / nw
+        twf = _max_run_sorted(F.array_sort(ws)) / nw
+        ttr = F.size(F.array_distinct(ws)) / nw
+        stop = F.size(F.filter(ws, lambda w: F.array_contains(en, w)))
+        return F.concat_ws(
             ",",
             F.when(nw < min_words, F.lit("too_short")),
             F.when(nw > max_words, F.lit("too_long")),
@@ -735,6 +737,13 @@ def quality_reject_reasons(
             F.when(ttr < min_type_token_ratio, F.lit("low_diversity")),
             F.when(stop < min_stopword_hits, F.lit("no_stopwords")),
         )
+
+    # NULL text gets its own explicit verdict: without this branch,
+    # Spark's legacy F.size(NULL)=-1 would synthesize
+    # "too_short,no_stopwords" while a NULL-propagating SQL engine
+    # omits every CASE — a cross-engine divergence on NULL corpora.
+    return F.when(F.col(text_col).isNull(), F.lit("null_text")).otherwise(
+        F.transform(F.array(words(text_col)), verdict)[0]
     )
 
 
@@ -776,6 +785,20 @@ def quality_filter_scan(
     )
 
 
+def benchmark_shingles(
+    benchmark: DataFrame, text_col: str = "text", ngram_n: int = 5
+) -> DataFrame:
+    """The distinct word ``ngram_n``-gram strings (column ``_s``) of an
+    evaluation set: the build side of every decontamination semi-join.
+    Joining on the string itself, not a hash of it, is the SQL
+    reference's ``c.g = b.g`` exactly, with no collision case."""
+    from methyl_data_pipeline_spark.ext.dedup import shingles
+
+    return benchmark.select(
+        F.explode(shingles(text_col, ngram_n)).alias("_s")
+    ).distinct()
+
+
 def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -787,26 +810,23 @@ def decontaminate(
     word ``ngram_n``-gram with an evaluation set (the standard
     train/test-overlap check run before pretraining).
 
-    Scale shape: both sides explode to distinct md5'd shingles, the
-    benchmark side (eval sets are small) broadcasts, and a semi-join
-    marks contaminated docs — corpus-side cost is one scan + one
-    explode, never a doc×doc comparison. Returns the corpus ids with
-    ``contaminated`` + the count of distinct overlapping shingles.
+    Scale shape: the corpus explodes to its shingle strings, the
+    benchmark's distinct shingles (:func:`benchmark_shingles`; eval sets
+    are small) broadcast, and a semi-join on the string keeps the hits —
+    corpus-side cost is one scan + one explode, never a doc×doc
+    comparison. Returns the corpus ids with ``contaminated`` + the count
+    of distinct overlapping shingles.
     """
     from methyl_data_pipeline_spark.ext.dedup import shingles
 
-    def shingled(df: DataFrame, out: str) -> DataFrame:
-        return df.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(shingles(text_col, ngram_n))).alias("_s"),
-        ).select(id_col, md5_long(F.col("_s")).alias(out))
-
-    bench_sh = shingled(benchmark, "_h").select("_h").distinct()
-    corpus_sh = shingled(corpus, "_h")
+    bench_sh = F.broadcast(benchmark_shingles(benchmark, text_col, ngram_n))
     hits = (
-        corpus_sh.join(F.broadcast(bench_sh), "_h", "left_semi")
+        corpus.select(
+            F.col(id_col), F.explode(shingles(text_col, ngram_n)).alias("_s")
+        )
+        .join(bench_sh, "_s", "left_semi")
         .groupBy(id_col)
-        .agg(F.countDistinct("_h").alias("n_overlap_shingles"))
+        .agg(F.countDistinct("_s").alias("n_overlap_shingles"))
     )
     return (
         corpus.select(id_col)
@@ -1201,7 +1221,7 @@ def heavy_hitters(
     min_share, descending.
     """
     from methyl_data_pipeline_spark import cache
-    from methyl_data_pipeline_spark.ext.dedup import shingles, shingles_from_words
+    from methyl_data_pipeline_spark.ext.dedup import shingles, shingles_from_norm
 
     # NULL texts produce no grams on the explode path (explode of a
     # null array emits nothing), so they must contribute 0 to the
@@ -1218,17 +1238,15 @@ def heavy_hitters(
     # the naive exact shuffle rather than silently lose true hitters.
     support = min_share * 0.9
     if prefilter and support >= 1e-4:
-        # materialize the normalized word arrays ONCE: the sketch
-        # pass, the exact candidate count, and the denominator all
-        # read this projection — without the persist each re-runs the
-        # regex/split chain, the dominant CPU cost of the plan
-        ws_df = cache.track(
-            nn.select(
-                F.split(normalize_label(F.col(text_col)), " ").alias("_ws")
-            )
+        # materialize the normalized bodies ONCE: the sketch pass, the
+        # exact candidate count, and the denominator all read this
+        # projection — without the persist each re-runs the normalize
+        # regex chain, the dominant CPU cost of the plan
+        norm_df = cache.track(
+            nn.select(normalize_label(F.col(text_col)).alias("_norm"))
         )
-        grams = ws_df.select(
-            F.explode(shingles_from_words(F.col("_ws"), ngram_n)).alias("gram")
+        grams = norm_df.select(
+            F.explode(shingles_from_norm(F.col("_norm"), ngram_n)).alias("gram")
         )
         cands = grams.stat.freqItems(["gram"], support=support).collect()[0][0]
         # ONE aggregation yields both the exact candidate counts AND
@@ -1713,6 +1731,8 @@ def train_quality_weights(
 
     if features is None:
         features = _doc_bucket_counts(df, text_col, id_col, buckets)
+    else:
+        _check_features_frame(features, "train_quality_weights")
     feats = features.join(labels, "_id")
     # persisted: bounded by ``buckets`` (<= ~10^3 rows) and consumed by
     # THREE branches (weights, gram totals, via totals the bias row) —
@@ -1832,6 +1852,8 @@ def train_lang_weights(
         features = _doc_bucket_counts(
             df.filter(F.col(lang_col).isNotNull()), text_col, id_col, buckets
         )
+    else:
+        _check_features_frame(features, "train_lang_weights")
     feats = features.join(labeled, "_id")
     per = feats.groupBy("_lang", "_b").agg(F.sum("_c").alias("_c"))
     from methyl_data_pipeline_spark import cache
@@ -1924,7 +1946,7 @@ def lang_id_nb(
     # the q_lang_id_nb A/B measured the shared cached featurize
     # faster).
     dbc = (
-        features
+        _check_features_frame(features, "lang_id_nb")
         if features is not None
         else _doc_bucket_counts(df, text_col, id_col, buckets)
     )
@@ -2037,6 +2059,8 @@ def quality_score_linear(
     )
     if features is None:
         features = _doc_bucket_counts(df, text_col, id_col, buckets)
+    else:
+        _check_features_frame(features, "quality_score_linear")
     scored = (
         features
         .join(F.broadcast(wtab.filter(F.col("_b") >= 0)), "_b", "left")
@@ -2108,10 +2132,12 @@ def dsir_weights(
     token stream but still corpus-row-scaled. Measured head-to-head
     (VERDICT r10 #5, local[32], medians of 3): sf0.1 raw 4,285 docs ->
     two-scan 3.22 s vs staged 3.02 s; 10x corpus 42,850 docs -> 6.57 s
-    vs 4.94 s — staging wins at both scales and the gap WIDENS with
-    corpus size (the tokenize+md5 scan is the growing term). It stays
-    opt-in rather than default because the persisted frame is
-    ~n_docs x distinct-buckets rows cluster-wide: at 100 TB that is a
+    vs 4.94 s — staging won at both scales there, the gap widening with
+    corpus size (the tokenize+md5 scan is the growing term); a later
+    local-driver A/B of ``dsir_select`` at sf0.1 measured it slower
+    (3.26-4.06 s staged vs 2.45-3.48 s lazy), so the win needs a costly
+    re-scan. It stays opt-in rather than default because the persisted
+    frame is ~n_docs x distinct-buckets rows cluster-wide: at 100 TB that is a
     spill-prone cache whose cost depends on executor storage, while
     the re-scan cost depends on source locality — flip it on when the
     raw source is expensive to re-read (remote object store,
@@ -2207,8 +2233,11 @@ def dsir_select(
     no single-task corpus funnel); only the k survivors pass through
     the rank window. ``stage`` passes through to
     :func:`dsir_weights` (persist the collapsed raw feature frame
-    between its two passes — measured faster at 1x AND 10x, see that
-    docstring for the cache-vs-rescan trade).
+    between its two passes). On a local driver the lazy default is
+    the faster one — ``q_dsir_select`` at sf0.1 measured 2.45-3.48 s
+    lazy vs 3.26-4.06 s staged; staging pays off only where re-reading
+    the raw corpus dominates (see that docstring for the cache-vs-rescan
+    trade).
     """
     if k < 1:
         raise ValueError("dsir_select: k must be >= 1")

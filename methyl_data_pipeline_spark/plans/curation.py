@@ -3,34 +3,41 @@
 
 Stage chain, the standard order of an LLM-data pipeline:
 
-1. **Quality gate** — C4/Gopher verdict (``ext.text.quality_filter_scan``,
-   zero-shuffle scan) drops boilerplate/degenerate docs first so every
+1. **Quality gate** — C4/Gopher verdict (``ext.text.quality_reject_reasons``,
+   a per-row filter) drops boilerplate/degenerate docs first so every
    later stage touches less data.
 2. **PII redaction** — emails/IPs/phones replaced with typed tokens
    (pure ``regexp_replace`` chain, still scan-side).
 3. **Decontamination** — docs sharing any word-5-gram with the
-   benchmark set are dropped (broadcast semi-join on shingle hashes).
-4. **Exact dedup** — md5-fingerprint min-id winner
-   (``ext.dedup.dedup_exact``, one shuffle).
+   benchmark set are dropped (broadcast semi-join on shingle strings).
+4. **Exact dedup** — md5-fingerprint min-id winner (the semantics of
+   ``ext.dedup.dedup_exact``, one shuffle).
 5. **Packing** — survivors laid end-to-end per source shard and cut
    into fixed-token context windows (``ext.pack.pack_sequences``, one
    shuffle per shard window).
 
-Total physical cost: ONE regex pass over the corpus (quality verdict +
-redaction + normalization + word split, materialized into the persisted
-frame all downstream stages reuse), the decontaminate broadcast
-semi-join, and two keyed shuffles — every filter happens before the
-first shuffle, so at 100 TB the expensive stages see only surviving
-documents, and the regex chain (the dominant CPU cost) runs exactly
-once. Decontamination is a direct anti-join on contaminated ids (the
-per-doc overlap counts of the standalone operator are skipped). The
-whole chain is deterministic (md5 keys, min-id winners, id-ordered
-packing) and therefore DuckDB-oracle-checkable end to end.
+Physical cost per document:
+
+- the quality gate splits each document's words ONCE (a lambda-bound
+  split shared by all six signals), above the input spread;
+- redaction + normalization run once, into the one persisted frame —
+  ``(id, shard, _norm)`` for gate survivors only;
+- the shingles of that normalized body are one generated-code
+  ``regexp_extract_all`` (``ext.dedup.shingles_from_norm``), exploded
+  and broadcast-semi-joined on the shingle STRING against the
+  benchmark's distinct shingles (the SQL reference's ``c.g = b.g``);
+- the dedup shuffle carries ``(id, shard, n_tokens, fingerprint)`` —
+  not the body — and the pack shuffles once per shard window.
+
+Every filter happens before the dedup shuffle, so the expensive
+stages see only surviving documents. The whole chain is deterministic
+(md5 keys, min-id winners, id-ordered packing) and therefore
+DuckDB-oracle-checkable end to end.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from methyl_data_pipeline_spark import cache
 from methyl_data_pipeline_spark.ext.pack import pack_sequences
@@ -61,33 +68,16 @@ def curate(
     """Run the five-stage curation chain; returns per-doc window
     placement for the surviving corpus: (shard, id, n_tokens, bin_idx,
     bin_offset, spans_boundary)."""
-    from methyl_data_pipeline_spark.ext.dedup import shingles, shingles_from_words
-    from methyl_data_pipeline_spark.ext.text import md5_long
+    from methyl_data_pipeline_spark.ext.dedup import _spread, shingles_from_norm
+    from methyl_data_pipeline_spark.ext.text import benchmark_shingles, md5_long
+    from methyl_data_pipeline_spark.functions.scalar import normalize_label
 
-    # quality verdict is a pure Column expression — filter inline, no
-    # self-semi-join against a verdict projection (halves the doc scan).
-    # _spread first: the gate + normalize regex chain below is the
-    # dominant CPU cost of the plan, and a single-file local scan
-    # would evaluate it on ONE core (guide §2.5 input skew —
-    # repartition right after the read; the test parquet is a single
-    # row group, so split-size configs cannot parallelize it). A bare
-    # repartition is not enough — Catalyst pushes the deterministic
-    # gate predicate back through the exchange onto the 1-partition
-    # scan (measured on curate_batch_twin: 4.3 s in one task). r14
-    # used a full-width persist of the spread corpus as the pushdown
-    # barrier; VERDICT r14 #1 measured that bimodally unstable at 32
-    # cores (driver spread [1.7, 36.3] s — two stacked corpus persists
-    # churning storage) and wrong at 100 TB (materializing the raw
-    # corpus to dodge a pushdown that is desirable on a naturally
-    # split scan). The barrier is now NON-MATERIALIZING: a
-    # nondeterministic column (spark_partition_id) referenced by an
-    # always-true conjunct — PushPredicateThroughNonJoin requires
-    # every project field to be deterministic, so the gate legally
-    # stays above the exchange (guide §4.4's asNondeterministic
-    # principle) and the only persist left in this plan is the narrow
-    # survivors-only ``red`` frame below.
-    from methyl_data_pipeline_spark.ext.dedup import _spread
-
+    # _spread first: a single-file local scan would run the gate and
+    # normalize regex chain on ONE core. A bare repartition is not
+    # enough — Catalyst pushes the deterministic gate back through the
+    # exchange onto the 1-partition scan — so an always-true conjunct on
+    # the nondeterministic spark_partition_id() pins the gate above it
+    # without materializing the corpus.
     kept = (
         _spread(docs, id_col)
         .withColumn("_bar", F.spark_partition_id())
@@ -96,61 +86,38 @@ def curate(
             & (F.col("_bar") >= 0)
         )
     )
-    # normalize ONCE: redaction + lower/trim/whitespace-collapse + the
-    # word split are materialized into the persisted frame, so the
-    # three downstream consumers (shingle explode, dedup key, token
-    # count) reuse them instead of re-running the regex chain per
-    # consumer — at 100 TB the regex scans are the dominant CPU cost
-    # of this plan, and this caps them at exactly one pass.
-    from methyl_data_pipeline_spark.functions.scalar import normalize_label
-
+    # the one persist: survivors' redacted + normalized bodies, read by
+    # both the shingle explode and the dedup key
     norm = normalize_label(redact_pii_text(F.col(text_col)))
     red = cache.track(
         kept.select(F.col(id_col), F.col(shard_col), norm.alias("_norm"))
-        .withColumn("_ws", F.split(F.col("_norm"), " "))
     )
-    # decontamination as a direct anti-join on contaminated ids — the
-    # per-doc overlap COUNT of ext.text.decontaminate is diagnostic
-    # output this pipeline immediately discards, so skip its groupBy
-    # and keep just: explode -> broadcast semi-join -> distinct ids.
-    bench_sh = (
-        benchmark.select(
-            F.explode(F.array_distinct(shingles(text_col, ngram_n))).alias("_s")
-        )
-        .select(md5_long(F.col("_s")).alias("_h"))
-        .distinct()
-    )
+    # decontamination as a direct anti-join on contaminated ids (the
+    # per-doc overlap count of ext.text.decontaminate is not needed)
+    bench_sh = F.broadcast(benchmark_shingles(benchmark, text_col, ngram_n))
     contaminated = (
         red.select(
             F.col(id_col),
-            F.explode(
-                F.array_distinct(shingles_from_words(F.col("_ws"), ngram_n))
-            ).alias("_s"),
+            F.explode(shingles_from_norm(F.col("_norm"), ngram_n)).alias("_s"),
         )
-        .select(id_col, md5_long(F.col("_s")).alias("_h"))
-        .join(F.broadcast(bench_sh), "_h", "left_semi")
+        .join(bench_sh, "_s", "left_semi")
         .select(id_col)
         .distinct()
     )
     clean = red.join(contaminated, id_col, "left_anti")
-    # exact dedup on the precomputed normalized body: min-id winner as
-    # a fingerprint-partitioned row_number — ONE fact shuffle, where
-    # the groupBy-min + semi-join form shuffles the fact table twice
-    # (the winners frame is corpus-sized, so AQE cannot broadcast it at
-    # scale); same rewrite curate_batch_twin measured 4.7 s -> 3.0 s on
-    from pyspark.sql import Window
-
-    keyed = clean.withColumn("_fp", md5_long(F.col("_norm")))
-    w = Window.partitionBy("_fp").orderBy(id_col)
-    unique = (
-        keyed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    toks = unique.select(
+    # exact dedup: min-id winner as a fingerprint-partitioned
+    # row_number — ONE shuffle, carrying only the narrow row
+    keyed = clean.select(
         F.col(id_col),
         F.col(shard_col),
-        F.size(F.col("_ws")).cast("long").alias("n_tokens"),
+        F.size(F.split(F.col("_norm"), " ")).cast("long").alias("n_tokens"),
+        md5_long(F.col("_norm")).alias("_fp"),
+    )
+    w = Window.partitionBy("_fp").orderBy(id_col)
+    toks = (
+        keyed.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_fp")
     )
     return pack_sequences(
         toks, "n_tokens", window_tokens, id_col=id_col, shard_col=shard_col

@@ -427,7 +427,7 @@ def _curate_projection(
     :func:`curate_batch_twin`); it pins the gate filter above the
     caller's repartition exchange without materializing anything.
     Output rows are identical with or without it."""
-    from methyl_data_pipeline_spark.ext.dedup import bloom_test, shingles_from_words
+    from methyl_data_pipeline_spark.ext.dedup import bloom_test, shingles_from_norm
     from methyl_data_pipeline_spark.ext.text import md5_long, quality_reject_reasons
     from methyl_data_pipeline_spark.functions.scalar import normalize_label
     from methyl_data_pipeline_spark.plans.curation import redact_pii_text
@@ -443,16 +443,8 @@ def _curate_projection(
         norm.alias("_norm"),
     ).withColumn("_ws", F.split(F.col("_norm"), " "))
     if bloom_words is not None:
-        # bind _ws as a lambda variable before shingling: Catalyst's
-        # projection collapse inlines _ws back into split(regex-chain),
-        # and without the binding the ngram slice re-evaluates that
-        # whole chain per shingle (no CSE inside HOF lambdas) —
-        # measured 26 s -> ~2 s on the sf0.1 streaming curation chain
         contaminated = F.exists(
-            F.transform(
-                F.array(F.col("_ws")),
-                lambda ws: F.array_distinct(shingles_from_words(ws, ngram_n)),
-            )[0],
+            F.array_distinct(shingles_from_norm(F.col("_norm"), ngram_n)),
             lambda s: bloom_test(md5_long(s), bloom_words, m_bits, k),
         )
         red = red.filter(~contaminated)

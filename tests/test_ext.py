@@ -482,6 +482,36 @@ def test_decontaminate_flags_overlap(spark):
     assert got[12] == (False, 0)
 
 
+def test_features_hook_rejects_wrong_shape_frame(spark):
+    """Every ``features=`` consumer checks the frame's column contract:
+    a raw docs frame passed by mistake raises instead of being joined
+    blindly on ``_id``/``_b`` into a diverged fit or score."""
+    from methyl_data_pipeline_spark.ext.text import (
+        lang_id_nb,
+        quality_score_linear,
+        train_lang_weights,
+        train_quality_weights,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c", "en", 1)], "doc_id long, text string, lang string, y int"
+    )
+    lang_w = spark.createDataFrame(
+        [("en", 0, 0.0, 0.0, 0.0)],
+        "lang string, bucket long, delta double, floor double, prior double",
+    )
+    q_w = spark.createDataFrame([(0, 0.0)], "bucket long, weight double")
+    calls = {
+        "train_quality_weights": lambda: train_quality_weights(docs, "y", features=docs),
+        "train_lang_weights": lambda: train_lang_weights(docs, features=docs),
+        "lang_id_nb": lambda: lang_id_nb(docs, lang_w, features=docs),
+        "quality_score_linear": lambda: quality_score_linear(docs, q_w, features=docs),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match=name):
+            call()
+
+
 def test_repetition_signals_planted_boilerplate(spark):
     from methyl_data_pipeline_spark.ext.text import repetition_signals
 

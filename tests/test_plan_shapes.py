@@ -76,12 +76,10 @@ def test_curate_plan_has_exactly_one_narrow_persist(docs):
 
     cached_cols = set()
     for ln in plan.splitlines():
-        if "InMemoryRelation" in ln and "Arguments" not in ln:
-            continue
         if ln.strip().startswith("Arguments:") and "StorageLevel" in ln:
             # references to one cache render with re-mapped expression
             # ids (#0L vs #56L) — strip them before deduping
-            cached_cols.add(re.sub(r"#\d+", "", ln.strip())[:120])
+            cached_cols.add(re.sub(r"#\d+", "", ln.strip()))
     assert len(cached_cols) <= 1, (
         f"expected at most one distinct persist in the curate plan, "
         f"saw {len(cached_cols)}: {sorted(cached_cols)}"
@@ -90,6 +88,38 @@ def test_curate_plan_has_exactly_one_narrow_persist(docs):
     # persisted frame carries only the normalized projection
     for c in cached_cols:
         assert "_norm" in c, f"persisted frame is not the narrow red frame: {c}"
+
+
+def test_curate_tokenizes_each_document_once(docs):
+    """plans.curation.curate splits each document once in the quality
+    gate (the split is lambda-bound and shared by all six signals), and
+    its decontamination semi-join matches shingle STRINGS built by one
+    generated-code regex: no md5 on the shingle side, and no
+    interpreted transform(sequence(...)) n-gram builder anywhere."""
+    from methyl_data_pipeline_spark.plans.curation import curate
+
+    bench = docs.filter(F.col("doc_id") % 13 == 0)
+    corpus = docs.filter(F.col("doc_id") % 13 != 0)
+    plan = _formatted(curate(corpus, bench))
+    blocks = _node_blocks(plan)
+    headers = [b.splitlines()[0] for b in blocks]
+
+    gate = [b for b, h in zip(blocks, headers)
+            if h.endswith(") Filter") and "too_short" in b]
+    assert len(gate) == 1, headers
+    assert gate[0].count("split(") == 1, gate[0][:2000]
+
+    generates = [b for b, h in zip(blocks, headers) if h.endswith(") Generate")]
+    assert generates, headers
+    for b in generates:
+        assert "regexp_extract_all(" in b and "md5" not in b, b[:1000]
+    semis = [b for b, h in zip(blocks, headers)
+             if "Join" in h and "LeftSemi" in b]
+    assert semis, headers
+    for b in semis:
+        assert "md5" not in b, b[:1000]
+
+    assert "transform(sequence(" not in plan
 
 
 def test_bpe_encode_word_stream_is_spread(docs):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from methyl_data_pipeline_spark import model
@@ -421,6 +421,42 @@ def test_property_bloom_never_false_negative(spark, bench_texts, seed):
     words = bloom_build(hashes, "_h", m_bits=1 << 12, k=4)
     probed = bloom_contains(hashes, "_h", words, m_bits=1 << 12, k=4)
     assert probed.filter(~F.col("_bloom_hit")).count() == 0
+
+
+# tabs/newlines around the text survive Spark's space-only trim and
+# normalize to a leading/trailing space (an empty first/last token);
+# U+2028 is a line terminator that \s does not squeeze
+_SHINGLE_TEXT = st.one_of(
+    st.none(),
+    st.text(
+        alphabet=st.sampled_from(list("abZ \t\n") + ["ü", "日", "🚀", "\u2028"]),
+        max_size=30,
+    ),
+)
+
+
+@example(["", "\ta b c d e f\n", "one two", "über 日本 🚀 x y z", None], 5)
+@given(st.lists(_SHINGLE_TEXT, min_size=1, max_size=20), st.integers(1, 6))
+@settings(max_examples=20, deadline=None)
+def test_property_shingles_match_python_reference(spark, texts, n):
+    """The regex shingler equals the word-window reference on the
+    normalized string: every run of n consecutive ``split(' ')`` tokens
+    (empty ones included), the whole string when it has fewer than n
+    tokens, and NULL for NULL text."""
+    from methyl_data_pipeline_spark.ext.dedup import shingles
+    from methyl_data_pipeline_spark.functions.scalar import normalize_label
+
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    rows = df.select(
+        normalize_label(F.col("text")).alias("s"), shingles("text", n).alias("g")
+    ).collect()
+    for r in rows:
+        if r.s is None:
+            assert r.g is None
+            continue
+        t = r.s.split(" ")
+        ref = [" ".join(t[i:i + n]) for i in range(len(t) - n + 1)] or [r.s]
+        assert r.g == ref, (r.s, n)
 
 
 def test_curate_partitioning_invariant(spark):
