@@ -72,10 +72,10 @@ def shingles_from_norm(norm: Column, n: int = 3) -> Column:
     pipeline that holds the normalized body (e.g. plans.curation) shingle
     it without re-running the normalize regex chain.
 
-    One ``regexp_extract_all``, which has generated code (the
-    ``transform``/``slice`` builder it replaces is interpreted per row):
-    every token start — the string start or a position after a space —
-    captures the next n tokens through a lookahead. A string of fewer
+    One ``regexp_extract_all``, which has generated code (Spark's
+    higher-order array functions are interpreted per row): every token
+    start — the string start or a position after a space — captures
+    the next n tokens through a lookahead. A string of fewer
     than n tokens has no such capture, and the second alternative
     (anchored at the string start) captures the whole string instead,
     so it yields ``[norm]``. NULL in, NULL out: a NULL doc drops from
@@ -84,9 +84,8 @@ def shingles_from_norm(norm: Column, n: int = 3) -> Column:
     # a positive (?<= ) so the middle of a surrogate pair (after an
     # emoji's high half) never counts as a token start
     short = "|^.*" if n > 1 else ""
-    return F.regexp_extract_all(
-        norm, F.lit(f"(?s)(?:^|(?<= ))(?=([^ ]*(?: [^ ]*){{{n - 1}}}{short}))"), F.lit(1)
-    )
+    pattern = f"(?s)(?:^|(?<= ))(?=([^ ]*(?: [^ ]*){{{n - 1}}}{short}))"
+    return F.regexp_extract_all(norm, F.lit(pattern), F.lit(1))
 
 
 def shingles(text_col: str, n: int = 3) -> Column:
